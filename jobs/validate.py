@@ -26,6 +26,7 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from dataclasses import replace
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -189,6 +190,7 @@ def run_streaming(spark: SparkSession, args: argparse.Namespace) -> int:
     via their checkpoints, and the verdict report is recomputed from the
     full violations sink. Re-invoking after more files land processes
     only the new files — the streaming resume story from the same CLI."""
+    from sgb_data_validator_spark.operators.rules import VIOLATION_SCHEMA
     from sgb_data_validator_spark.plans.pipeline import compute_verdicts
     from sgb_data_validator_spark.streaming import incremental as si
 
@@ -212,11 +214,7 @@ def run_streaming(spark: SparkSession, args: argparse.Namespace) -> int:
     q2.awaitTermination()
     q3.awaitTermination()
 
-    viol_schema = (
-        "rule_id string, conv_id string, turn_idx int, column string, "
-        "offending_value string, severity string, part string"
-    )
-    rows = spark.read.schema(viol_schema).parquet(f"{out}/violations_stream/rows")
+    rows = spark.read.schema(VIOLATION_SCHEMA).parquet(f"{out}/violations_stream/rows")
     seq = (
         spark.read.schema(si.SEQ_OUT_SCHEMA)
         .parquet(f"{out}/violations_stream/seq")
@@ -230,7 +228,7 @@ def run_streaming(spark: SparkSession, args: argparse.Namespace) -> int:
             "part",
         )
     )
-    dups = spark.read.schema(si.DUP_OUT_SCHEMA).parquet(f"{out}/violations_stream/dups")
+    dups = spark.read.schema(VIOLATION_SCHEMA).parquet(f"{out}/violations_stream/dups")
     violations = rows.unionByName(seq).unionByName(dups)
     turns = spark.read.parquet(args.turns)
     verdicts = compute_verdicts(turns, violations)
@@ -239,11 +237,34 @@ def run_streaming(spark: SparkSession, args: argparse.Namespace) -> int:
     return 0 if verdicts.where(F.col("status") == "FAILED").limit(1).count() == 0 else 1
 
 
+def check_families(args: argparse.Namespace, rules) -> list:
+    """The check families the flags select, in the default union order
+    with each opt-in beside the family it extends."""
+    from sgb_data_validator_spark.plans import families as fam
+
+    closing = tuple(r.strip() for r in (args.closing_roles or "").split(",") if r.strip())
+    return [
+        fam.row_rules(rules),
+        fam.uniqueness,
+        fam.opening_role(("system",)),
+        *([fam.closing_role(closing)] if closing else []),
+        fam.conversation_refs,
+        *([fam.manifest_turn_count] if args.reconcile_manifest else []),
+        fam.tool_refs,
+        fam.sequence,
+        fam.drift,
+        *([fam.fill_rate_drift(args.fill_rate_tol)] if args.fill_rate_drift else []),
+        *([fam.tail_freshness(args.tail_freshness_s)] if args.tail_freshness_s is not None else []),
+    ]
+
+
 def run(spark: SparkSession, args: argparse.Namespace) -> int:
+    from sgb_data_validator_spark.operators import rules as R
     from sgb_data_validator_spark.operators.stats import stats_digest
     from sgb_data_validator_spark.plans.pipeline import (
         TranscriptTables,
         materialize,
+        transcript_row_rules,
         validate,
     )
     from sgb_data_validator_spark.sources import sinks
@@ -275,17 +296,14 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
             return 0
         turns = turns.where(F.col("part").isin(pending))
 
+    def optional_table(ref: str | None):
+        return read_table(spark, ref, args.table_format) if ref else None
+
     t = TranscriptTables(
         turns=turns,
-        conversations=read_table(spark, args.conversations, args.table_format)
-        if args.conversations
-        else None,
-        allowed_tools=read_table(spark, args.allowed_tools, args.table_format)
-        if args.allowed_tools
-        else None,
-        baseline_stats=read_table(spark, args.baseline_stats, args.table_format)
-        if args.baseline_stats
-        else None,
+        conversations=optional_table(args.conversations),
+        allowed_tools=optional_table(args.allowed_tools),
+        baseline_stats=optional_table(args.baseline_stats),
     )
     if (
         args.reconcile_manifest
@@ -297,46 +315,40 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
             "has no n_turns_expected column — reconciliation skipped",
             file=sys.stderr,
         )
-    suite_rules = None
+    # ONE row-rule set serves the certificate and the full run, so the
+    # certificate bounds exactly the row-rule rates the run reports
     if args.rules_spec:
         import json as _json
 
-        from sgb_data_validator_spark.operators.rules import rules_from_spec
-
         with open(args.rules_spec) as fh:
             spec = _json.load(fh)
-        # fails HERE on an unknown rule name or bad kwargs — before any
-        # cluster time is spent (the suite-as-config contract)
-        suite_rules = rules_from_spec(spec)
+        # fails HERE on an unknown rule name, bad kwargs or an empty
+        # suite — before any cluster time is spent (the suite-as-config
+        # contract)
+        rules = R.rules_from_spec(spec)
         print(
-            f"rules-spec: {len(suite_rules.rules)} rules loaded from "
-            f"{args.rules_spec}",
+            f"rules-spec: {len(rules.rules)} rules loaded from {args.rules_spec}",
             file=sys.stderr,
         )
+    else:
+        rules = transcript_row_rules()
+    if args.partition_consistency:
+        # the misrouted-write check part == date(ts), folded into the
+        # fused row-rule projection: zero extra scans
+        rules.add(R.partition_matches_ts())
     if args.certify_bp is not None:
-        from sgb_data_validator_spark.operators import rules as R
         from sgb_data_validator_spark.operators.certify import (
             sampled_certification,
             sampled_certification_by_part,
         )
-        from sgb_data_validator_spark.plans.pipeline import transcript_row_rules
 
-        # the certificate must bound exactly the row-rule rates the full
-        # run would report: a loaded suite replaces the default family,
-        # and the partition-consistency opt-in extends it the same way
-        # compute_violations does
-        cert_rules = suite_rules or transcript_row_rules()
-        if args.partition_consistency:
-            cert_rules = R.RowRuleSet(list(cert_rules.rules)).add(
-                R.partition_matches_ts()
-            )
         # scope disclosure: the certificate attests the ROW-RULE family
         # only. Uniqueness, referential, sequence, and conv-level checks
         # are not row-local and are NOT bounded by it — with
         # --certify-target they run only on the escalated partitions.
         print(
             "certify: certificate covers the row-rule family "
-            f"({len(cert_rules.rules)} rules); uniqueness/referential/"
+            f"({len(rules.rules)} rules); uniqueness/referential/"
             "sequence/conv-level checks are NOT attested by it",
             file=sys.stderr,
         )
@@ -346,7 +358,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
         if args.certify_target:
             cert = sampled_certification_by_part(
                 turns,
-                cert_rules.flags(turns),
+                rules.flags(turns),
                 cert_key,
                 rate_bp=args.certify_bp,
                 tol=args.certify_tol,
@@ -387,16 +399,11 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
             if any(p is None for p in escalate):
                 keep = keep | F.col("part").isNull()
             turns = turns.where(keep)
-            t = TranscriptTables(
-                turns=turns,
-                conversations=t.conversations,
-                allowed_tools=t.allowed_tools,
-                baseline_stats=t.baseline_stats,
-            )
+            t = replace(t, turns=turns)
         else:
             cert = sampled_certification(
                 turns,
-                cert_rules.flags(turns),
+                rules.flags(turns),
                 cert_key,
                 rate_bp=args.certify_bp,
                 tol=args.certify_tol,
@@ -425,21 +432,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
             "dim='fill_rate' rows — completeness drift check is a no-op",
             file=sys.stderr,
         )
-    result = validate(
-        t,
-        row_rules=suite_rules,
-        reconcile_manifest=args.reconcile_manifest,
-        fill_rate_drift=args.fill_rate_drift,
-        fill_rate_tol=args.fill_rate_tol,
-        partition_consistency=args.partition_consistency,
-        closing_roles=(
-            tuple(s.strip() for s in args.closing_roles.split(",") if s.strip())
-            or None
-        )
-        if args.closing_roles
-        else None,
-        tail_freshness_s=args.tail_freshness_s,
-    )
+    result = validate(t, check_families(args, rules))
     # compute the fact-derived frames ONCE: the fan-out below (6 sinks +
     # ledger + console verdicts) is ~8 actions, each of which would
     # otherwise re-execute the multi-scan violations DAG from the fact

@@ -64,11 +64,12 @@ def sample_predicate(key: Column, rate_bp: int) -> Column:
 
 def _stack_expr(flags: Sequence[tuple[str, Column]]) -> str:
     """stack() unpivot expression over the per-rule sum slots. rule_ids
-    are spliced as SQL string literals, so embedded single quotes are
-    doubled — a rule_id is user data (reachable verbatim from a
-    --rules-spec JSON file), never expression syntax."""
+    are spliced as SQL string literals, so backslashes are escaped and
+    then embedded single quotes are doubled — a rule_id is user data
+    (reachable verbatim from a --rules-spec JSON file), never
+    expression syntax."""
     args = ", ".join(
-        "'{}', __k{}".format(rule_id.replace("'", "''"), i)
+        "'{}', __k{}".format(rule_id.replace("\\", "\\\\").replace("'", "''"), i)
         for i, (rule_id, _) in enumerate(flags)
     )
     return f"stack({len(flags)}, {args})"

@@ -485,52 +485,6 @@ def dedup_clusters_star(pairs: DataFrame, max_iterations: int = 50) -> DataFrame
 
 # ---------------------------------------------------------------- jaccard
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_cols: list[str],
-    threshold: float = 0.9,
-    shingle_n: int = 1,
-) -> DataFrame:
-    """Exact n-gram Jaccard within explicit blocking keys — the verify
-    stage of a dedup pipeline (LSH proposes, this confirms).
-
-    Scale shape: the gram join runs per (block, gram); candidate volume
-    is bounded by block sizes, set by the caller's blocking keys. The
-    gram table shuffles (block, gram, id) triplets, never documents."""
-    block = F.concat_ws("\x1f", *[F.col(c) for c in block_cols])
-    grams = df.select(
-        F.col(id_col).alias("id"),
-        block.alias("block"),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("gram"),
-    ).distinct()
-    sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("n_grams"))
-    a, b = grams.alias("a"), grams.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.gram") == F.col("b.gram"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_grams").alias("na"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_grams").alias("nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.col("inter").cast("bigint").alias("inter"), "jaccard")
-    )
-
-
 def verify_jaccard_pairs(
     pairs: DataFrame,
     df: DataFrame,

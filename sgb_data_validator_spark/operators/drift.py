@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sgb_data_validator_spark.operators.rules import SEV_ERROR, violation_rows
+
 EPSILON = 1e-6
 
 
@@ -262,26 +264,23 @@ def drift_violations(
     kls = kl_divergence(turns, baseline, "role").unionByName(
         kl_divergence(turns, baseline, "tool")
     )
-    kl_v = kls.where(
-        (F.col("kl") > kl_threshold) & (2.0 * F.col("n_obs") * F.col("kl") > kl_chi2_crit)
-    ).select(
-        F.concat(F.lit("drift.kl."), F.col("dim")).alias("rule_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
-        F.col("dim").alias("column"),
-        F.round("kl", 6).cast("string").alias("offending_value"),
-        F.lit("error").alias("severity"),
-        "part",
+    drifted = (F.col("kl") > kl_threshold) & (2.0 * F.col("n_obs") * F.col("kl") > kl_chi2_crit)
+    kl_v = violation_rows(
+        kls.where(drifted),
+        rule_id=F.concat(F.lit("drift.kl."), F.col("dim")),
+        column=F.col("dim"),
+        offending_value=F.round("kl", 6),
+        severity=SEV_ERROR,
+        part=F.col("part"),
     )
     chi = ts_chi_square(turns, baseline)
-    chi_v = chi.where(F.col("chi2") > chi2_threshold).select(
-        F.lit("drift.chi2.ts").alias("rule_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
-        F.lit("ts").alias("column"),
-        F.round("chi2", 3).cast("string").alias("offending_value"),
-        F.lit("error").alias("severity"),
-        "part",
+    chi_v = violation_rows(
+        chi.where(F.col("chi2") > chi2_threshold),
+        rule_id="drift.chi2.ts",
+        column="ts",
+        offending_value=F.round("chi2", 3),
+        severity=SEV_ERROR,
+        part=F.col("part"),
     )
     return kl_v.unionByName(chi_v)
 

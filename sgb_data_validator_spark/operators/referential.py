@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sgb_data_validator_spark.operators.rules import SEV_ERROR, SEV_WARNING
+from sgb_data_validator_spark.operators.rules import SEV_ERROR, SEV_WARNING, violation_rows
 
 
 def orphan_violations(
@@ -117,14 +117,14 @@ def zero_children_violations(
     """Dimension members with no fact rows (no-children warning)."""
     fact_keys = fact.select(F.col(fact_key).alias("__k")).distinct()
     childless = dim.join(fact_keys, on=dim[dim_key] == fact_keys["__k"], how="left_anti")
-    return childless.select(
-        F.lit(rule_id).alias("rule_id"),
-        F.col(dim_key).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
-        F.lit(dim_key).alias("column"),
-        F.col(dim_key).cast("string").alias("offending_value"),
-        F.lit(severity).alias("severity"),
-        F.lit(None).cast("string").alias("part"),
+    return violation_rows(
+        childless,
+        rule_id=rule_id,
+        conv_id=F.col(dim_key),
+        column=dim_key,
+        offending_value=F.col(dim_key),
+        severity=severity,
+        part=None,
     )
 
 

@@ -33,7 +33,41 @@ SEV_ERROR = "error"
 SEV_WARNING = "warning"
 
 #: canonical violations schema (order matters for unionByName-free unions)
-VIOLATION_COLS = ["rule_id", "conv_id", "turn_idx", "column", "offending_value", "severity", "part"]
+_VIOLATION_TYPES = {
+    "rule_id": "string",
+    "conv_id": "string",
+    "turn_idx": "int",
+    "column": "string",
+    "offending_value": "string",
+    "severity": "string",
+    "part": "string",
+}
+VIOLATION_COLS = list(_VIOLATION_TYPES)
+#: the same schema as DDL, for readers of stored violations
+VIOLATION_SCHEMA = ", ".join(f"{c} {t}" for c, t in _VIOLATION_TYPES.items())
+
+
+def violation_rows(
+    df: DataFrame,
+    *,
+    rule_id: Column | str,
+    column: Column | str,
+    offending_value: Column | str,
+    severity: Column | str,
+    part: Column | str | None,
+    conv_id: Column | str | None = None,
+) -> DataFrame:
+    """Project ``df`` onto the canonical row of a conversation- or
+    partition-level violation (turn_idx NULL). Each field is a Column,
+    a literal, or None for a typed NULL, and is cast to its canonical
+    type."""
+    values = (rule_id, conv_id, None, column, offending_value, severity, part)
+    return df.select(
+        *[
+            (v if isinstance(v, Column) else F.lit(v)).cast(typ).alias(name)
+            for (name, typ), v in zip(_VIOLATION_TYPES.items(), values)
+        ]
+    )
 
 # reference truncates offending values to 80 chars in messages
 # (validate.py:496-498); we keep the same cap on offending_value.
@@ -340,6 +374,8 @@ def rules_from_spec(spec: Sequence[dict]) -> "RowRuleSet":
     reference's data-driven vocabularies and required-field tables.
     Unknown rule names raise immediately with the known names, so a
     typo fails at suite load, not mid-job."""
+    if not spec:
+        raise ValueError("empty suite spec: list at least one rule")
     rs = RowRuleSet()
     for entry in spec:
         kwargs = dict(entry)
@@ -509,11 +545,3 @@ class RowRuleSet:
                 "status"
             ),
         )
-
-
-def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [],
-        "rule_id string, conv_id string, turn_idx int, column string, "
-        "offending_value string, severity string, part string",
-    )

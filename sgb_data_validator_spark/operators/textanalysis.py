@@ -100,15 +100,6 @@ def token_count_bpe(text: Column, chars_per_token: int = BPE_CHARS_PER_TOKEN) ->
     )
 
 
-def tokenize_ws(text: Column) -> Column:
-    """Whitespace token array (all-whitespace-safe: returns an empty
-    array, never [''])."""
-    cleaned = F.regexp_replace(text, r"^\s+|\s+$", "")
-    return F.when(cleaned == "", F.array().cast("array<string>")).otherwise(
-        F.split(cleaned, r"\s+")
-    )
-
-
 def tokenize_bpe(text: Column, chars_per_token: int = BPE_CHARS_PER_TOKEN) -> Column:
     """BPE-approximation subword ARRAY: each TOKEN_PATTERN pre-token is
     sliced into ceil(len/chars_per_token) pieces of at most

@@ -123,12 +123,8 @@ def q_streaming_row_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=f"{tmp}/ckpt",
     )
     query.awaitTermination()
-    out_schema = (
-        "rule_id string, conv_id string, turn_idx int, column string, "
-        "offending_value string, severity string, part string"
-    )
     return (
-        spark.read.schema(out_schema)
+        spark.read.schema(R.VIOLATION_SCHEMA)
         .parquet(f"{tmp}/out")
         .groupBy("rule_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))

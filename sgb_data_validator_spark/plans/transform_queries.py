@@ -125,6 +125,7 @@ def q_transcript_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tool.role_consistency); conversations opened by a purchase/signup
     fire conv.opening_role."""
     from sgb_data_validator_spark.operators import rules as R
+    from sgb_data_validator_spark.plans import families as fam
     from sgb_data_validator_spark.plans.pipeline import TranscriptTables, compute_violations
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -144,7 +145,17 @@ def q_transcript_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         R.tool_role_consistency(tool_roles=("click",)),
     )
     t = TranscriptTables(turns=turns, conversations=convs, allowed_tools=tools)
-    return compute_violations(t, row_rules=rules, opening_roles=("view", "click"))
+    return compute_violations(
+        t,
+        [
+            fam.row_rules(rules),
+            fam.uniqueness,
+            fam.opening_role(("view", "click")),
+            fam.conversation_refs,
+            fam.tool_refs,
+            fam.sequence,
+        ],
+    )
 
 
 _IN_TYPES = ", ".join(repr(x) for x in EVENT_TYPES)

@@ -412,8 +412,8 @@ def q_closing_role(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagging conversations that ended in a crash/truncation instead of
     a clean terminal event (operator form:
     operators/windows.py:closing_role_violations — reachable in the
-    pipeline via validate(closing_roles=...), an opt-in applied to the
-    PHYSICAL turns table where turn_idx already exists).
+    pipeline as the opt-in plans/families.py:closing_role family, applied
+    to the PHYSICAL turns table where turn_idx already exists).
 
     Deriving turns from events would pay a full row_number window sort
     of the fact just to learn the last turn's index — but turn_idx is

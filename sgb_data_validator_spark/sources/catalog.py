@@ -70,9 +70,10 @@ def write_table(
     only the partitions present in ``df`` are replaced.
 
     * path (or fmt="parquet") → dynamic-overwrite partitioned parquet,
-    * dotted name (or fmt="table") → ``saveAsTable`` with the same
-      dynamic overwrite (the session catalog; with an Iceberg catalog
-      configured this is the V2 path),
+    * dotted name (or fmt="table") → ``saveAsTable`` on the first write;
+      once the table exists, ``insertInto`` with the same dynamic
+      overwrite and the columns in the table's order (``saveAsTable``
+      in overwrite mode would replace the whole table),
     * fmt="iceberg" → ``writeTo(ref).overwritePartitions()``, failing
       with the same actionable message as the reader when the runtime
       lacks the plugin.
@@ -93,6 +94,13 @@ def write_table(
     as_table = fmt == "table" or (
         fmt is None and "/" not in ref and not os.path.exists(ref)
     )
+    if as_table and df.sparkSession.catalog.tableExists(ref):
+        # insertInto matches columns by position
+        cols = df.sparkSession.table(ref).columns
+        df.select(*cols).write.option("partitionOverwriteMode", "dynamic").insertInto(
+            ref, overwrite=True
+        )
+        return
     writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     if part:
         writer = writer.partitionBy(part)

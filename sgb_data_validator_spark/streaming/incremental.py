@@ -102,10 +102,7 @@ def stream_deduplicated_turns(turns: DataFrame, watermark: str = "2 hours") -> D
 
 
 DUP_STATE_SCHEMA = "n_seen long"
-DUP_OUT_SCHEMA = (
-    "rule_id string, conv_id string, turn_idx int, column string, "
-    "offending_value string, severity string, part string"
-)
+DUP_OUT_SCHEMA = R.VIOLATION_SCHEMA
 
 
 def stream_duplicate_violations(

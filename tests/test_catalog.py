@@ -28,3 +28,24 @@ def test_forced_iceberg_fails_actionably_without_plugin(spark):
 def test_unknown_format_rejected(spark):
     with pytest.raises(ValueError):
         read_table(spark, "x", fmt="orc2")
+
+
+def test_table_write_keeps_earlier_partitions(spark):
+    """A catalog-table write replaces only the partitions it carries:
+    day 2 lands beside day 1, and rewriting day 2 leaves day 1 alone."""
+    from sgb_data_validator_spark.sources.catalog import write_table
+
+    schema = "conv_id string, n int, part string"
+    spark.sql("DROP TABLE IF EXISTS write_table_probe")
+    try:
+        write_table(spark.createDataFrame([("a", 1, "2026-01-01")], schema), "write_table_probe")
+        # columns in another order than the table's: matched by name
+        day2 = spark.createDataFrame([("2026-01-02", "b", 2)], "part string, conv_id string, n int")
+        write_table(day2, "write_table_probe")
+        rows = {tuple(r) for r in read_table(spark, "write_table_probe").collect()}
+        assert rows == {("a", 1, "2026-01-01"), ("b", 2, "2026-01-02")}
+        write_table(spark.createDataFrame([("c", 3, "2026-01-02")], schema), "write_table_probe")
+        rows = {tuple(r) for r in read_table(spark, "write_table_probe").collect()}
+        assert rows == {("a", 1, "2026-01-01"), ("c", 3, "2026-01-02")}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS write_table_probe")

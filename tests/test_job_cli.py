@@ -226,16 +226,21 @@ def test_rules_spec_replaces_default_suite(spark, tmp_path):
     cert_rules = {r.rule_id for r in cert.collect()}
     assert cert_rules == {"not_null.text", "vocab.role", "range.turn_idx"}
 
-    # unknown rule name fails at load, before any Spark work
-    bad_path = f"{base}/bad.json"
-    with open(bad_path, "w") as fh:
-        json.dump([{"rule": "no_such_rule", "column": "x"}], fh)
+    # an unknown rule name or an empty suite fails at load, before any
+    # Spark work
     import pytest
-    with pytest.raises(ValueError, match="no_such_rule"):
-        run(spark, parse_args([
-            "--turns", f"{base}/fx/turns", "--out", f"{base}/bad_report",
-            "--rules-spec", bad_path,
-        ]))
+    for bad_spec, match in (
+        ([{"rule": "no_such_rule", "column": "x"}], "no_such_rule"),
+        ([], "empty suite spec"),
+    ):
+        bad_path = f"{base}/bad.json"
+        with open(bad_path, "w") as fh:
+            json.dump(bad_spec, fh)
+        with pytest.raises(ValueError, match=match):
+            run(spark, parse_args([
+                "--turns", f"{base}/fx/turns", "--out", f"{base}/bad_report",
+                "--rules-spec", bad_path,
+            ]))
 
 
 def test_certify_target_unattested_partitions_escalate(spark, tmp_path):
@@ -267,15 +272,18 @@ def test_certify_target_unattested_partitions_escalate(spark, tmp_path):
 
 
 def test_certify_with_quoted_rule_id_and_partition_consistency(spark, tmp_path):
-    """A rule_id containing a single quote (user data from --rules-spec)
-    must not break the certificate's unpivot, and --partition-consistency
-    must extend the certified family the same way the full run extends
-    its rules."""
+    """A rule_id containing a single quote or a backslash (user data
+    from --rules-spec) must survive the certificate's unpivot verbatim,
+    and the certificate and the full run must evaluate one rule set,
+    --partition-consistency's rule included."""
     import json
 
     base = str(tmp_path)
     write_fixture_tables(spark, FixtureConfig(n_turns=1500), f"{base}/fx")
-    spec = [{"rule": "not_null", "column": "text", "rule_id": "ops' check"}]
+    spec = [
+        {"rule": "not_null", "column": "text", "rule_id": "ops' check"},
+        {"rule": "not_null", "column": "text", "rule_id": "ops\\new"},
+    ]
     with open(f"{base}/suite.json", "w") as fh:
         json.dump(spec, fh)
     rc = run(spark, parse_args([
@@ -289,4 +297,12 @@ def test_certify_with_quoted_rule_id_and_partition_consistency(spark, tmp_path):
     cert = spark.read.parquet(f"{base}/q_report/certificate")
     rules = {r.rule_id for r in cert.collect()}
     assert "ops' check" in rules           # quote survived as data
+    assert "ops\\new" in rules             # backslash survived as data
     assert "part.ts_mismatch" in rules     # opt-in rule certified too
+    # a 10000 bp sample is the whole table, so each rule's certified
+    # count is exactly the full run's count for that rule
+    viol = spark.read.parquet(f"{base}/q_report/violations")
+    full = {r.rule_id: r["count"] for r in viol.groupBy("rule_id").count().collect()}
+    assert {r.rule_id: r.k_viol for r in cert.collect()} == {
+        rid: full.get(rid, 0) for rid in rules
+    }

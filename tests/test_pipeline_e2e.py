@@ -7,6 +7,8 @@ from dataclasses import replace
 import pytest
 from pyspark.sql import functions as F
 
+from sgb_data_validator_spark.plans import families as fam
+from sgb_data_validator_spark.plans.families import DEFAULT_FAMILIES
 from sgb_data_validator_spark.plans.pipeline import (
     TranscriptTables,
     compute_verdicts,
@@ -182,7 +184,7 @@ def test_fill_rate_drift_opt_in(spark, tables, result):
     drift.fill.text; day 0 (clean by construction) must not; and the
     default path's violation count is unchanged by the feature
     existing."""
-    res = validate(tables, fill_rate_drift=True)
+    res = validate(tables, [*DEFAULT_FAMILIES, fam.fill_rate_drift(0.005)])
     fill_v = res.violations.where(F.col("rule_id").startswith("drift.fill.")).collect()
     assert fill_v, "expected drift.fill.* violations on the dirty fixture"
     days = sorted({r.part for r in fill_v if r.rule_id == "drift.fill.text"})
@@ -215,18 +217,20 @@ def test_fill_rate_drift_clean_config_quiet(spark):
         allowed_tools=generate_allowed_tools(spark),
         baseline_stats=generate_baseline_stats(spark, cfg),
     )
-    res = validate(t, fill_rate_drift=True)
+    res = validate(t, [*DEFAULT_FAMILIES, fam.fill_rate_drift(0.005)])
     assert res.violations.where(F.col("rule_id").startswith("drift.fill.")).count() == 0
     assert res.passed is True
 
 
 def test_closing_roles_opt_in(spark, tables, result):
-    """validate(closing_roles=...) adds conv.closing_role rows on the
+    """The closing_role family adds conv.closing_role rows on the
     dirty fixture and leaves the default path's counts untouched."""
     from sgb_data_validator_spark.plans.pipeline import validate
 
     base = result.violations.count()
-    res2 = validate(tables, closing_roles=("assistant", "tool", "system", "user"))
+    res2 = validate(
+        tables, [*DEFAULT_FAMILIES, fam.closing_role(("assistant", "tool", "system", "user"))]
+    )
     extra = res2.violations.where("rule_id = 'conv.closing_role'").count()
     assert res2.violations.count() == base + extra
     # roles cover the whole vocabulary ⇒ only corrupt-role conversations
@@ -261,11 +265,11 @@ def test_materialize_semantic_parity(spark, tables, result):
 
 
 def test_tail_freshness_opt_in(spark, tables, result):
-    """validate(tail_freshness_s=...) adds part.tail_freshness rows keyed
+    """The tail_freshness family adds part.tail_freshness rows keyed
     on the table's own part column, leaves the default path untouched,
     and a generous threshold adds none."""
     base = result.violations.count()
-    res2 = validate(tables, tail_freshness_s=0)
+    res2 = validate(tables, [*DEFAULT_FAMILIES, fam.tail_freshness(0)])
     fresh = res2.violations.where("rule_id = 'part.tail_freshness'")
     extra = fresh.count()
     # threshold 0: every partition except the one carrying the global
@@ -278,5 +282,5 @@ def test_tail_freshness_opt_in(spark, tables, result):
     verdict_parts = {str(r.part) for r in res2.verdicts.collect()}
     assert {str(r.part) for r in rows} <= verdict_parts
     # a day-long threshold flags nothing
-    res3 = validate(tables, tail_freshness_s=86_400)
+    res3 = validate(tables, [*DEFAULT_FAMILIES, fam.tail_freshness(86_400)])
     assert res3.violations.where("rule_id = 'part.tail_freshness'").count() == 0

@@ -371,3 +371,58 @@ def test_resume_filter_prunes_partitions_at_scan(spark, turns_parquet):
     assert all(p in pf for p in pending)          # pending days pruned IN
     # and no residual row-level Filter node doing the partition work
     assert "PartitionFilters: []" not in plan
+
+
+#: the default compute_violations over all four tables, executed
+#: (adaptive final plan) on the 2,000-turn parquet fixture: fact-table
+#: parquet scans and shuffle Exchange nodes. Counted the way the
+#: benchmark's traced run counts them (SparkPlanInfo nodes, query
+#: stages and reused exchanges walked into).
+DEFAULT_PIPELINE_FACT_SCANS = 14
+DEFAULT_PIPELINE_EXCHANGES = 32
+
+
+def _executed_plan_nodes(spark, df) -> list:
+    info = spark._jvm.org.apache.spark.sql.execution.SparkPlanInfo.fromSparkPlan(
+        df._jdf.queryExecution().executedPlan()
+    )
+    nodes, stack = [], [info]
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
+def test_default_pipeline_plan_shape(spark, turns_parquet):
+    """Pins the default check-family list's physical plan: how often it
+    scans the fact table and how many shuffles it runs."""
+    from sgb_data_validator_spark.plans.pipeline import TranscriptTables, compute_violations
+    from sgb_data_validator_spark.sources.generator import (
+        generate_allowed_tools,
+        generate_baseline_stats,
+        generate_conversations,
+    )
+
+    cfg = FixtureConfig(n_turns=2000)
+    t = TranscriptTables(
+        turns=spark.read.parquet(turns_parquet),
+        conversations=generate_conversations(spark, cfg),
+        allowed_tools=generate_allowed_tools(spark),
+        baseline_stats=generate_baseline_stats(spark, cfg),
+    )
+    v = compute_violations(t)
+    v.write.format("noop").mode("overwrite").save()
+    nodes = _executed_plan_nodes(spark, v)
+
+    def is_fact_scan(n) -> bool:
+        meta = n.metadata()
+        return (
+            n.nodeName().startswith("Scan parquet")
+            and meta.contains("Location")
+            and turns_parquet in meta.apply("Location")
+        )
+
+    assert sum(map(is_fact_scan, nodes)) == DEFAULT_PIPELINE_FACT_SCANS
+    assert sum(n.nodeName() == "Exchange" for n in nodes) == DEFAULT_PIPELINE_EXCHANGES

@@ -142,6 +142,7 @@ def test_write_table_catalog_roundtrip(spark, tmp_path):
 # ------------------------------------------------- NULL-stated reconcile text
 
 def test_reconcile_null_stated_offending_value_readable(spark):
+    from sgb_data_validator_spark.plans import families as fam
     from sgb_data_validator_spark.plans.pipeline import TranscriptTables, compute_violations
 
     turns = spark.createDataFrame(
@@ -153,8 +154,15 @@ def test_reconcile_null_stated_offending_value_readable(spark):
     )
     v = compute_violations(
         TranscriptTables(turns=turns, conversations=convs),
-        reconcile_manifest=True,
-        opening_roles=None,
+        [
+            fam.row_rules(),
+            fam.uniqueness,
+            fam.conversation_refs,
+            fam.manifest_turn_count,
+            fam.tool_refs,
+            fam.sequence,
+            fam.drift,
+        ],
     )
     row = v.where("rule_id = 'conv.turn_count'").first()
     assert row is not None

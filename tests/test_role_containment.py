@@ -143,6 +143,7 @@ def test_reconcile_flags_dup_inflation_and_vanished_conv(spark):
 
 
 def test_validate_reconcile_manifest_opt_in(spark):
+    from sgb_data_validator_spark.plans import families as fam
     from sgb_data_validator_spark.plans.pipeline import TranscriptTables, compute_violations
     from sgb_data_validator_spark.sources.generator import (
         FixtureConfig,
@@ -160,7 +161,7 @@ def test_validate_reconcile_manifest_opt_in(spark):
         baseline_stats=generate_baseline_stats(spark, cfg),
     )
     base = compute_violations(t)
-    with_rec = compute_violations(t, reconcile_manifest=True)
+    with_rec = compute_violations(t, [*fam.DEFAULT_FAMILIES, fam.manifest_turn_count])
     assert base.where(F.col("rule_id") == "conv.turn_count").count() == 0
     rec_rows = with_rec.where(F.col("rule_id") == "conv.turn_count")
     n_rec = rec_rows.count()

@@ -271,23 +271,28 @@ def test_partition_matches_ts_rule(spark):
 
 
 def test_partition_consistency_opt_in_zero_extra_scans(spark):
+    from sgb_data_validator_spark.plans import families as fam
     from sgb_data_validator_spark.plans.pipeline import (
         TranscriptTables,
         compute_violations,
+        transcript_row_rules,
     )
 
     t = TranscriptTables(turns=_pc_turns(spark))
-    base = compute_violations(t, opening_roles=None)
-    on = compute_violations(t, opening_roles=None, partition_consistency=True)
+    # the default list without the opening-role family
+    others = [fam.uniqueness, fam.conversation_refs, fam.tool_refs, fam.sequence, fam.drift]
+    base = compute_violations(t, [fam.row_rules(), *others])
+    with_pc = transcript_row_rules().add(R.partition_matches_ts())
+    on = compute_violations(t, [fam.row_rules(with_pc), *others])
     assert base.where("rule_id = 'part.ts_mismatch'").count() == 0
     assert on.where("rule_id = 'part.ts_mismatch'").count() == 1
     # default-path violation counts unchanged by the opt-in
     assert (
         on.where("rule_id <> 'part.ts_mismatch'").count() == base.count()
     )
-    # the opt-in must not mutate the caller's rule set (copy-on-extend)
+    # the pipeline must not mutate the caller's rule set
     rs = R.RowRuleSet().add(R.not_null("text"))
-    compute_violations(t, row_rules=rs, opening_roles=None, partition_consistency=True)
+    compute_violations(t, [fam.row_rules(rs), *others])
     assert [r.rule_id for r in rs.rules] == ["not_null.text"]
 
 
