@@ -14,16 +14,20 @@ The reference transforms each record in Python and writes
 applied-transformation list and per-item report,
 src/api.py:1205-1230). The Spark form:
 
-* the canonical F8 composition (``functions/native.py:text_pipeline``:
+* the canonical F8 composition (``functions/native.py:TEXT_STAGES``:
   entities+NFC → whitespace → abbreviations → markdown → wikidata →
-  URLs) applied to ``text`` as ONE projection — the chain is built
-  stage-by-stage IN THE SAME plan, so Catalyst collapses it into the
-  single pass the composed function compiles to (parity with
-  ``text_pipeline`` is pytest-pinned);
-* per-stage changed-row counts ride the write via ``df.observe`` —
-  the manifest costs ZERO extra scans (same trick as backup.py's
-  checksummed manifests). Null-safe comparison: NULL text passes
-  through every stage and never counts as changed;
+  URLs, the same list ``text_pipeline`` folds) applied to ``text`` one
+  stage column at a time: each stage reads the previous stage's
+  column, so every stage's regexes run once per row (a nested chain
+  shared by the counters and the output would be inlined into every
+  reference: 86 ``regexp_replace`` calls in the executed plan for 12
+  distinct ones). The output keeps the input columns in input order,
+  with ``text`` = the last stage; no stage column is written;
+* per-stage changed-row counts compare adjacent stage columns and ride
+  the write via ``df.observe`` — the manifest costs ZERO extra scans
+  (same trick as backup.py's checksummed manifests). Null-safe
+  comparison: NULL text passes through every stage and never counts as
+  changed;
 * the manifest (``transformation_metadata.json`` analog) records the
   ordered stage list, per-stage changed counts, row count, and
   lineage; ``--dry-run`` computes the manifest with a one-pass
@@ -44,7 +48,7 @@ import json
 import sys
 import time
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -73,33 +77,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     return args
 
 
-def staged_pipeline(col: Column, exact_unicode: bool = True) -> list[tuple[str, Column]]:
-    """The F8 composition unrolled as (stage_name, cumulative_column)
-    pairs, in the EXACT order ``text_pipeline`` applies them — the
-    parity test asserts the last stage equals ``text_pipeline(col)``.
-    Exposing the intermediates is what lets the manifest count
-    per-stage changes inside the same single projection."""
-    from sgb_data_validator_spark.functions import native as N
-
-    stages: list[tuple[str, Column]] = []
-    out = col
-    if exact_unicode:
-        from sgb_data_validator_spark.functions.vectorized import entities_nfc_udf
-
-        out = entities_nfc_udf(out)
-        stages.append(("decode_entities_nfc", out))
-    for name, fn in (
-        ("normalize_whitespace", N.normalize_whitespace),
-        ("normalize_abbreviations", N.normalize_abbreviations),
-        ("normalize_markdown_links", N.normalize_markdown_links),
-        ("normalize_wikidata_url", N.normalize_wikidata_url),
-        ("normalize_urls", N.normalize_urls),
-    ):
-        out = fn(out)
-        stages.append((name, out))
-    return stages
-
-
 def transformed_with_metrics(
     turns: DataFrame, exact_unicode: bool = True
 ) -> tuple[DataFrame, Observation, list[str]]:
@@ -109,22 +86,31 @@ def transformed_with_metrics(
     ``rows`` plus one ``changed_<stage>`` count per stage, harvested
     for free by whatever single action materializes the frame (the
     table write, or the dry-run aggregation)."""
-    stages = staged_pipeline(F.col("text"), exact_unicode=exact_unicode)
-    prev: Column = F.col("text")
+    from sgb_data_validator_spark.functions.native import text_stages
+
+    stages = text_stages(exact_unicode)
+    staged = turns
+    prev = "text"
     metrics = [F.count(F.lit(1)).alias("rows")]
-    for name, cur in stages:
+    for name, fn in stages:
+        # one column per stage: Catalyst does not inline a non-trivial
+        # expression that the next projection references twice, so each
+        # stage is evaluated once and read by the next stage and by its
+        # counter
+        cur = f"__text_{name}"
+        staged = staged.withColumn(cur, fn(F.col(prev)))
         # null-safe: NULL text stays NULL through the chain and is
         # never "changed"
         metrics.append(
-            F.sum((~prev.eqNullSafe(cur)).cast("long")).alias(f"changed_{name}")
+            F.sum((~F.col(prev).eqNullSafe(F.col(cur))).cast("long")).alias(f"changed_{name}")
         )
         prev = cur
     obs = Observation("transform_metrics")
-    # observe BEFORE the rename: the metric expressions reference the
-    # ORIGINAL text column; attaching them after withColumn("text", …)
-    # would re-resolve every F.col("text") against the transformed
-    # output and count zero changes
-    out = turns.observe(obs, *metrics).withColumn("text", stages[-1][1])
+    out = (
+        staged.observe(obs, *metrics)
+        .withColumn("text", F.col(prev))
+        .drop(*(f"__text_{name}" for name, _ in stages))
+    )
     return out, obs, [name for name, _ in stages]
 
 

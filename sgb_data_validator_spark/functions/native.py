@@ -17,6 +17,8 @@ genuinely cannot be expressed as column expressions; those live in
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -148,21 +150,41 @@ def transform_literal_only(
     return F.when(type_col == "literal", transformed).otherwise(value)
 
 
-def text_pipeline(col: Column, exact_unicode: bool = True) -> Column:
-    """F8 ordered composition (transformations.py:423-464), offline form:
-    entities → NFC → whitespace → abbreviations → markdown → wikidata →
-    URLs. Entity decoding + NFC ride ONE Arrow-batched pandas UDF
-    (the only Python in the chain); everything downstream is codegen'd
-    column expressions. With ``exact_unicode=False`` the UDF is skipped
-    entirely (for corpora known to be entity-free and NFC-normalized)."""
-    out = col
-    if exact_unicode:
-        from sgb_data_validator_spark.functions.vectorized import entities_nfc_udf
+def decode_entities_nfc(col: Column) -> Column:
+    """HTML-entity decoding + NFC, the one Arrow-batched pandas-UDF stage
+    of the F8 chain (imported lazily: it needs pandas)."""
+    from sgb_data_validator_spark.functions.vectorized import entities_nfc_udf
 
-        out = entities_nfc_udf(out)
-    out = normalize_whitespace(out)
-    out = normalize_abbreviations(out)
-    out = normalize_markdown_links(out)
-    out = normalize_wikidata_url(out)
-    out = normalize_urls(out)
+    return entities_nfc_udf(col)
+
+
+#: The F8 ordered composition (transformations.py:423-464), offline
+#: form, as (stage_name, function) pairs: entities → NFC → whitespace →
+#: abbreviations → markdown → wikidata → URLs. ``text_pipeline`` folds
+#: it into one expression; the transform job projects each stage as its
+#: own column so the manifest can count per-stage changes.
+TEXT_STAGES: tuple[tuple[str, Callable[[Column], Column]], ...] = (
+    ("decode_entities_nfc", decode_entities_nfc),
+    ("normalize_whitespace", normalize_whitespace),
+    ("normalize_abbreviations", normalize_abbreviations),
+    ("normalize_markdown_links", normalize_markdown_links),
+    ("normalize_wikidata_url", normalize_wikidata_url),
+    ("normalize_urls", normalize_urls),
+)
+
+
+def text_stages(exact_unicode: bool = True) -> tuple[tuple[str, Callable[[Column], Column]], ...]:
+    """``TEXT_STAGES``, without the entities+NFC UDF stage when
+    ``exact_unicode`` is False (for corpora known to be entity-free and
+    NFC-normalized)."""
+    return TEXT_STAGES if exact_unicode else TEXT_STAGES[1:]
+
+
+def text_pipeline(col: Column, exact_unicode: bool = True) -> Column:
+    """F8 ordered composition of ``text_stages(exact_unicode)``. Entity
+    decoding + NFC ride ONE Arrow-batched pandas UDF (the only Python in
+    the chain); everything downstream is codegen'd column expressions."""
+    out = col
+    for _, fn in text_stages(exact_unicode):
+        out = fn(out)
     return out

@@ -9,8 +9,11 @@ human-reviewed profiling snapshot, /root/reference/src/profiling.py:57-83):
   vs baseline expected counts:  χ² = Σ_b (obs_b − exp_b)² / exp_b
 
 Both are pure column math over a groupBy(part, value) count — one
-shuffle keyed by (part, value), then a broadcast join against the tiny
-baseline dim, then a groupBy(part) reduction. No UDFs.
+shuffle keyed by (part, value), a window for the per-part total, then
+a broadcast join against the tiny baseline dim, then a groupBy(part)
+reduction. No UDFs. ``drift_violations`` runs all three of its
+dimensions (role, tool, hour of ts) over ONE fact scan: it stacks them
+into (dim, value) rows and counts by (part, dim, value) once.
 
 Smoothing: categories absent from the baseline get q = epsilon so a
 brand-new category produces a large-but-finite KL contribution instead
@@ -34,46 +37,58 @@ def categorical_freqs(turns: DataFrame, dim: str, value_col) -> DataFrame:
         .groupBy(F.col("part").cast("string").alias("part"), value_col.alias("value"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    totals = counts.groupBy("part").agg(F.sum("n").alias("total"))
-    return (
-        counts.join(totals, "part")
-        .select("part", F.lit(dim).alias("dim"), "value", (F.col("n") / F.col("total")).alias("p"), "n", "total")
+    # the per-part total is a window over the small grouped frame: a
+    # self-join on it would scan and group the fact a second time
+    total = F.sum("n").over(Window.partitionBy("part"))
+    return counts.select(
+        "part", F.lit(dim).alias("dim"), "value", (F.col("n") / total).alias("p"), "n", total.alias("total")
+    )
+
+
+def _drift_stats(observations: DataFrame, baseline: DataFrame) -> DataFrame:
+    """(part, dim, kl, n_obs, chi2) from one (part, dim, value) row per
+    observation: a groupBy(part, dim, value) count, a window for the
+    per-(part, dim) totals over that small frame, one broadcast join
+    against the baseline's (dim, value, freq), one groupBy(part, dim)."""
+    counts = (
+        observations.where(F.col("value").isNotNull())
+        .groupBy("part", "dim", "value")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    q = baseline.select("dim", "value", F.col("freq").alias("q"))
+    freqs = (
+        counts.withColumn("total", F.sum("n").over(Window.partitionBy("part", "dim")))
+        .join(F.broadcast(q), ["dim", "value"], "left")
+        .withColumn("q", F.coalesce(F.col("q"), F.lit(EPSILON)))
+    )
+    p = F.col("n") / F.col("total")
+    expected = F.col("q") * F.col("total")
+    return freqs.groupBy("part", "dim").agg(
+        F.sum(p * F.log(p / F.col("q"))).alias("kl"),
+        F.first("total").alias("n_obs"),
+        F.sum(F.pow(F.col("n") - expected, F.lit(2)) / expected).alias("chi2"),
+    )
+
+
+def _observations(turns: DataFrame, dim: str, value_col) -> DataFrame:
+    return turns.select(
+        F.col("part").cast("string").alias("part"), F.lit(dim).alias("dim"), value_col.alias("value")
     )
 
 
 def kl_divergence(
     turns: DataFrame, baseline: DataFrame, dim: str, value_col=None
 ) -> DataFrame:
-    """(part, dim, kl) — KL(p_partition ‖ q_baseline)."""
+    """(part, dim, kl, n_obs) — KL(p_partition ‖ q_baseline)."""
     value_col = value_col if value_col is not None else F.col(dim)
-    p = categorical_freqs(turns, dim, value_col)
-    q = baseline.where(F.col("dim") == dim).select("value", F.col("freq").alias("q"))
-    joined = p.join(F.broadcast(q), "value", "left").withColumn(
-        "q", F.coalesce(F.col("q"), F.lit(EPSILON))
-    )
-    return (
-        joined.groupBy("part")
-        .agg(
-            F.sum(F.col("p") * F.log(F.col("p") / F.col("q"))).alias("kl"),
-            F.first("total").alias("n_obs"),
-        )
-        .select("part", F.lit(dim).alias("dim"), "kl", "n_obs")
-    )
+    stats = _drift_stats(_observations(turns, dim, value_col), baseline)
+    return stats.select("part", "dim", "kl", "n_obs")
 
 
 def ts_chi_square(turns: DataFrame, baseline: DataFrame, dim: str = "ts_hour_bucket") -> DataFrame:
     """(part, dim, chi2) — hour-of-day histogram vs baseline expectation."""
-    obs = categorical_freqs(turns, dim, F.hour("ts").cast("string"))
-    q = baseline.where(F.col("dim") == dim).select("value", F.col("freq").alias("q"))
-    joined = obs.join(F.broadcast(q), "value", "left").withColumn(
-        "q", F.coalesce(F.col("q"), F.lit(EPSILON))
-    )
-    expected = F.col("q") * F.col("total")
-    return (
-        joined.groupBy("part")
-        .agg(F.sum(F.pow(F.col("n") - expected, F.lit(2)) / expected).alias("chi2"))
-        .select("part", F.lit(dim).alias("dim"), "chi2")
-    )
+    stats = _drift_stats(_observations(turns, dim, F.hour("ts").cast("string")), baseline)
+    return stats.select("part", "dim", "chi2")
 
 
 def psi(turns: DataFrame, baseline: DataFrame, dim: str, value_col=None) -> DataFrame:
@@ -253,36 +268,41 @@ def drift_violations(
     kl_chi2_crit: float = 40.0,
     chi2_threshold: float = 100.0,  # χ²(23) crit at p≈1e-11 — hour histograms
 ) -> DataFrame:
-    """Partition-level violations in the canonical violations schema.
+    """Partition-level violations in the canonical violations schema:
+    ``drift.kl.role`` and ``drift.kl.tool`` (KL divergence, as
+    :func:`kl_divergence`) and ``drift.chi2.ts`` (hour-of-day χ², as
+    :func:`ts_chi_square`).
 
     The KL trigger is scale-aware: under H0 (no drift), 2·n·KL is
     asymptotically χ²(k−1), so a partition drifts only when BOTH the
     effect size (kl > kl_threshold) and the evidence (2·n·kl >
     kl_chi2_crit) are large — small partitions don't false-positive on
     sampling noise, huge partitions don't alert on negligible shifts.
+
+    One fact scan for all three dimensions: one projection stacks
+    (role, tool, hour(ts)) into (dim, value) rows, and one
+    :func:`_drift_stats` computes KL and χ² for every (part, dim).
     """
-    kls = kl_divergence(turns, baseline, "role").unionByName(
-        kl_divergence(turns, baseline, "tool")
+    observations = turns.select(
+        F.col("part").cast("string").alias("part"),
+        F.expr(
+            "stack(3, 'role', role, 'tool', tool, 'ts_hour_bucket', cast(hour(ts) AS string))"
+        ).alias("dim", "value"),
     )
-    drifted = (F.col("kl") > kl_threshold) & (2.0 * F.col("n_obs") * F.col("kl") > kl_chi2_crit)
-    kl_v = violation_rows(
-        kls.where(drifted),
-        rule_id=F.concat(F.lit("drift.kl."), F.col("dim")),
-        column=F.col("dim"),
-        offending_value=F.round("kl", 6),
+    stats = _drift_stats(observations, baseline)
+    is_ts = F.col("dim") == "ts_hour_bucket"
+    kl, chi2 = F.col("kl"), F.col("chi2")
+    drifted = F.when(is_ts, chi2 > chi2_threshold).otherwise(
+        (kl > kl_threshold) & (2.0 * F.col("n_obs") * kl > kl_chi2_crit)
+    )
+    return violation_rows(
+        stats.where(drifted),
+        rule_id=F.when(is_ts, "drift.chi2.ts").otherwise(F.concat(F.lit("drift.kl."), F.col("dim"))),
+        column=F.when(is_ts, "ts").otherwise(F.col("dim")),
+        offending_value=F.when(is_ts, F.round(chi2, 3)).otherwise(F.round(kl, 6)),
         severity=SEV_ERROR,
         part=F.col("part"),
     )
-    chi = ts_chi_square(turns, baseline)
-    chi_v = violation_rows(
-        chi.where(F.col("chi2") > chi2_threshold),
-        rule_id="drift.chi2.ts",
-        column="ts",
-        offending_value=F.round("chi2", 3),
-        severity=SEV_ERROR,
-        part=F.col("part"),
-    )
-    return kl_v.unionByName(chi_v)
 
 
 def novel_entities(

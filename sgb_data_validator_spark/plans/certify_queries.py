@@ -204,8 +204,9 @@ def q_violation_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id % 97 exporter fires ref.tool AND tool.role_consistency on
     the same conversations, so that pair's lift ≈ N/n₉₇). Population N
     = conversations in turns ∪ manifest (the ghost), carried in-plan
-    as a broadcast one-row frame. The join runs on the distinct
-    (conv, rule) frame — violations-sized, never fact-sized."""
+    as a broadcast one-row frame; a NULL user is not a conversation, as
+    in the twin's ``count(DISTINCT user_id)``. The join runs on the
+    distinct (conv, rule) frame — violations-sized, never fact-sized."""
     from sgb_data_validator_spark.operators.certify import violation_cooccurrence
     from sgb_data_validator_spark.plans.transform_queries import q_transcript_pipeline
 
@@ -213,6 +214,7 @@ def q_violation_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     n_total = (
         ev.select("user_id")
+        .where(F.col("user_id").isNotNull())
         .distinct()
         .agg((F.count(F.lit(1)) + 1).cast("bigint").alias("n_total"))
     )

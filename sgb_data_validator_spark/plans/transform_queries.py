@@ -14,7 +14,7 @@ the pure-Python oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sgb_data_validator_spark.functions import native
@@ -356,17 +356,25 @@ def q_transform_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     (whitespace → wikidata → urls; the entities+NFC pandas-UDF stage is
     Python-regex territory, pytest-pinned instead). All three stage
     comparisons are conditional sums inside ONE aggregation over one
-    scan — exactly how the job observes them on the write."""
+    scan — exactly how the job observes them on the write. As in the
+    job, each stage is projected once as its own column, so its
+    regexes run once per row instead of once per reference."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    dirty = _dirty_text()
-    c1 = native.normalize_whitespace(dirty)
-    c2 = native.normalize_wikidata_url(c1)
-    c3 = native.normalize_urls(c2)
-    agg = docs.agg(
+    staged = (
+        docs.select(_dirty_text().alias("c0"))
+        .withColumn("c1", native.normalize_whitespace(F.col("c0")))
+        .withColumn("c2", native.normalize_wikidata_url(F.col("c1")))
+        .withColumn("c3", native.normalize_urls(F.col("c2")))
+    )
+
+    def changed(prev: str, cur: str) -> Column:
+        return F.sum((~F.col(prev).eqNullSafe(F.col(cur))).cast("bigint"))
+
+    agg = staged.agg(
         F.count(F.lit(1)).cast("bigint").alias("rows"),
-        F.sum((~dirty.eqNullSafe(c1)).cast("bigint")).alias("ws"),
-        F.sum((~c1.eqNullSafe(c2)).cast("bigint")).alias("wd"),
-        F.sum((~c2.eqNullSafe(c3)).cast("bigint")).alias("url"),
+        changed("c0", "c1").alias("ws"),
+        changed("c1", "c2").alias("wd"),
+        changed("c2", "c3").alias("url"),
     )
     return agg.select(
         F.expr(

@@ -378,8 +378,8 @@ def test_resume_filter_prunes_partitions_at_scan(spark, turns_parquet):
 #: parquet scans and shuffle Exchange nodes. Counted the way the
 #: benchmark's traced run counts them (SparkPlanInfo nodes, query
 #: stages and reused exchanges walked into).
-DEFAULT_PIPELINE_FACT_SCANS = 14
-DEFAULT_PIPELINE_EXCHANGES = 32
+DEFAULT_PIPELINE_FACT_SCANS = 9
+DEFAULT_PIPELINE_EXCHANGES = 19
 
 
 def _executed_plan_nodes(spark, df) -> list:

@@ -201,3 +201,40 @@ def test_all_violations_evicts_previous_sf_dir(spark):
     ]
     assert len(views) == 1  # single-entry semantics: old sf_dir evicted
     clear_violations_cache(spark)
+
+
+# ------------------------------------------- co-occurrence NULL-user population
+
+def test_violation_cooccurrence_population_skips_null_user(spark, tmp_path):
+    """N = distinct non-NULL users + the ghost conversation, as the SQL
+    twin's ``count(DISTINCT user_id) + 1``: a NULL user_id is not a
+    conversation of the population."""
+    from sgb_data_validator_spark.plans.certify_queries import q_violation_cooccurrence
+
+    # user 0 is an orphan (0 % 7) with stray 'shell' tools (0 % 97), so
+    # its conversation fires several rules together; user 1 is clean
+    rows = [
+        (0, "2024-01-01 00:00:00", 0, "view"),
+        (1, "2024-01-01 00:01:00", 0, "purchase"),
+        (2, "2024-01-01 00:02:00", 0, "click"),
+        (3, "2024-01-01 00:00:00", 1, "view"),
+        (4, "2024-01-01 00:01:00", 1, "click"),
+        (5, "2024-01-01 00:03:00", None, "view"),
+    ]
+    (
+        spark.createDataFrame(rows, "event_id long, ts string, user_id long, event_type string")
+        .select(
+            "event_id",
+            F.to_timestamp("ts").alias("ts"),
+            "user_id",
+            "event_type",
+            F.lit(1.0).alias("value"),
+            F.lit('{"k": 1}').alias("props"),
+        )
+        .write.parquet(str(tmp_path / "events.parquet"))
+    )
+    got = q_violation_cooccurrence(spark, str(tmp_path)).collect()
+    assert got
+    n_total = 2 + 1  # users 0 and 1, plus the ghost
+    for r in got:
+        assert r.lift == round(r.n_both * n_total / (r.n_a * r.n_b), 6), r

@@ -7,8 +7,8 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from jobs.transform import parse_args, run, staged_pipeline, transformed_with_metrics
-from sgb_data_validator_spark.functions.native import text_pipeline
+from jobs.transform import parse_args, run, transformed_with_metrics
+from sgb_data_validator_spark.functions.native import TEXT_STAGES, text_pipeline
 
 DIRT_ROWS = [
     # (conv_id, turn_idx, text, stages that must report it changed)
@@ -32,15 +32,29 @@ def turns(spark):
 
 
 def test_staged_pipeline_matches_canonical_composition(spark, turns):
-    """The job's unrolled stage chain IS text_pipeline — last stage
-    output equals the composed function on every row (incl. NULL)."""
-    stages = staged_pipeline(F.col("text"))
-    got = turns.select(
-        "conv_id",
-        stages[-1][1].alias("staged"),
-        text_pipeline(F.col("text")).alias("composed"),
+    """The job's stage-column chain IS text_pipeline — its cleaned
+    text equals the composed function on every row (incl. NULL), and
+    the frame keeps the input columns in input order."""
+    cleaned, _, stage_names = transformed_with_metrics(turns)
+    assert cleaned.columns == turns.columns
+    assert stage_names == [name for name, _ in TEXT_STAGES]
+    got = cleaned.select("conv_id", F.col("text").alias("staged")).join(
+        turns.select("conv_id", text_pipeline(F.col("text")).alias("composed")), "conv_id"
     )
+    assert got.count() == len(DIRT_ROWS)
     assert got.where(~F.col("staged").eqNullSafe(F.col("composed"))).count() == 0
+
+
+def test_each_stage_regex_runs_once_per_row(spark, turns):
+    """Each stage is projected once and read by the next stage and by
+    its counter, so the executed plan holds one regexp_replace per
+    distinct regex call of the stage list — not one per reference to
+    the cumulative chain (86 for 12 when the chain was inlined)."""
+    distinct = sum(str(fn(F.col("text"))).count("regexp_replace(") for _, fn in TEXT_STAGES)
+    assert distinct == 12
+    cleaned, _, _ = transformed_with_metrics(turns)
+    plan = cleaned._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("regexp_replace(") == distinct
 
 
 def test_manifest_counts_per_stage(spark, turns):
