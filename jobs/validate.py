@@ -28,7 +28,7 @@ import sys
 import time
 from dataclasses import replace
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -231,10 +231,18 @@ def run_streaming(spark: SparkSession, args: argparse.Namespace) -> int:
     dups = spark.read.schema(VIOLATION_SCHEMA).parquet(f"{out}/violations_stream/dups")
     violations = rows.unionByName(seq).unionByName(dups)
     turns = spark.read.parquet(args.turns)
-    verdicts = compute_verdicts(turns, violations)
-    for row in verdicts.orderBy("part").collect():
+    return report_verdicts(compute_verdicts(turns, violations))
+
+
+def report_verdicts(verdicts: DataFrame) -> int:
+    """Print one line per partition and return the exit code, 1 iff any
+    partition FAILED, from ONE collect of the O(parts) verdict frame.
+    The lines come in Spark's ascending ``part`` order: NULL first, then
+    by string."""
+    rows = sorted(verdicts.collect(), key=lambda r: (r.part is not None, r.part or ""))
+    for row in rows:
         print(f"{row.part}\t{row.status}\terrors={row.error_count}\twarnings={row.warning_count}")
-    return 0 if verdicts.where(F.col("status") == "FAILED").limit(1).count() == 0 else 1
+    return 1 if any(r.status == "FAILED" for r in rows) else 0
 
 
 def check_families(args: argparse.Namespace, rules) -> list:
@@ -264,6 +272,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
     from sgb_data_validator_spark.plans.pipeline import (
         TranscriptTables,
         materialize,
+        run_concurrently,
         transcript_row_rules,
         validate,
     )
@@ -337,6 +346,8 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
         # fused row-rule projection: zero extra scans
         rules.add(R.partition_matches_ts())
     if args.certify_bp is not None:
+        import pandas as pd
+
         from sgb_data_validator_spark.operators.certify import (
             sampled_certification,
             sampled_certification_by_part,
@@ -366,8 +377,10 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
             cert_rows = cert.collect()  # O(parts × rules) — ONE execution
             cert_rows.sort(key=lambda r: (str(r.part), r.rule_id))
             # write the artifact from the collected rows, not by
-            # re-executing the sampled scan
-            spark.createDataFrame(cert_rows, cert.schema).coalesce(1).write.mode(
+            # re-executing the sampled scan; a pandas frame takes the
+            # Arrow path into the JVM, with no Python worker
+            cert_df = pd.DataFrame(cert_rows, columns=cert.columns)
+            spark.createDataFrame(cert_df, cert.schema).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(f"{args.out}/certificate_by_part")
             suspect = {r.part for r in cert_rows if not r.certified}
@@ -409,7 +422,8 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
                 tol=args.certify_tol,
             )
             cert_rows = sorted(cert.collect(), key=lambda r: r.rule_id)
-            spark.createDataFrame(cert_rows, cert.schema).coalesce(1).write.mode(
+            cert_df = pd.DataFrame(cert_rows, columns=cert.columns)
+            spark.createDataFrame(cert_df, cert.schema).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(f"{args.out}/certificate")
             for row in cert_rows:
@@ -432,23 +446,32 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
             "dim='fill_rate' rows — completeness drift check is a no-op",
             file=sys.stderr,
         )
-    result = validate(t, check_families(args, rules))
-    # compute the fact-derived frames ONCE: the fan-out below (6 sinks +
-    # ledger + console verdicts) is ~8 actions, each of which would
-    # otherwise re-execute the multi-scan violations DAG from the fact
-    result = materialize(result, turns)
-    sinks.write_all(result, args.out)
-    elapsed = time.perf_counter() - t0
 
-    if ledger is not None:
+    def validated():
+        result = validate(t, check_families(args, rules))
+        # compute the fact-derived frames ONCE: the fan-out below (6
+        # sinks + ledger + console verdicts) is ~8 actions, each of which
+        # would otherwise re-execute the multi-scan violations DAG
+        result = materialize(result, turns)
+        sinks.write_all(result, args.out)
+        return result, time.perf_counter() - t0
+
+    if ledger is None:
+        result, elapsed = validated()
+    else:
         # ONE extra scan serves both ledger inputs: the sketch frame's
         # per-partition aggregation already counts rows, so part_rows is
         # a projection of it — recording mergeable HLL sketches costs no
-        # pass the ledger wasn't already paying for part_rows
+        # pass the ledger wasn't already paying for part_rows. It reads
+        # only turns, so it runs beside the validation instead of after
+        # the sinks.
         from sgb_data_validator_spark.operators.stats import hll_partition_sketches
         from sgb_data_validator_spark.sources.ledger import SketchStore
 
-        sk = hll_partition_sketches(turns, ["conv_id", "role", "tool"]).localCheckpoint()
+        (result, elapsed), sk = run_concurrently(
+            validated,
+            lambda: hll_partition_sketches(turns, ["conv_id", "role", "tool"]).localCheckpoint(),
+        )
         part_rows = sk.where(F.col("column") == "conv_id").select("part", "rows")
         run_id = ledger.record(
             result.verdicts, stats_digest(result.stats), part_rows, elapsed, args.lineage
@@ -458,9 +481,7 @@ def run(spark: SparkSession, args: argparse.Namespace) -> int:
         # sketches instead of rescanning validated data
         SketchStore(spark, f"{args.ledger}_sketches").record(sk, run_id=run_id)
 
-    for row in result.verdicts.orderBy("part").collect():
-        print(f"{row.part}\t{row.status}\terrors={row.error_count}\twarnings={row.warning_count}")
-    return 0 if result.passed else 1
+    return report_verdicts(result.verdicts)
 
 
 def main() -> None:

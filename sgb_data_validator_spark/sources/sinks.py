@@ -16,6 +16,11 @@ Spark analogs write DataFrames:
 
 Driver-side collects happen ONLY on pre-aggregated small frames
 (summary/pivot are bounded by rule- and resource-counts, not turns).
+
+``write_all`` writes the six artifacts concurrently, one driver thread
+each (plans/pipeline.py:run_concurrently): they go to distinct paths and
+read only the materialized result, so no write depends on another, and
+their mostly single-task jobs share the cores instead of queueing.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from pyspark.sql import DataFrame
 from sgb_data_validator_spark.plans.pipeline import (
     ValidationResult,
     pivot_report,
+    run_concurrently,
     spc_report,
     summary_report,
 )
@@ -85,10 +91,16 @@ def write_all(result: ValidationResult, base: str) -> None:
     validate.py:1180-1189 writes console+txt+csv+profiling; here each
     artifact is a path under ``base``). The parquet sinks are
     per-partition (resume-safe, dynamic overwrite); the two CSVs are
-    THIS run's console-report analogs and are replaced wholesale."""
-    write_violations(result.violations, f"{base}/violations")
-    write_verdicts(result.verdicts, f"{base}/verdicts")
-    write_summary_csv(result.violations, f"{base}/summary_csv")
-    write_pivot_csv(result.violations, f"{base}/pivot_csv")
-    write_stats(result.stats, f"{base}/stats")
-    write_spc_csv(result, f"{base}/spc_csv")
+    THIS run's console-report analogs and are replaced wholesale.
+
+    The six writes run concurrently, each with its own writer, mode and
+    layout; the call returns once all have finished and re-raises the
+    first failure (in the order below) after the others are done."""
+    run_concurrently(
+        lambda: write_violations(result.violations, f"{base}/violations"),
+        lambda: write_verdicts(result.verdicts, f"{base}/verdicts"),
+        lambda: write_summary_csv(result.violations, f"{base}/summary_csv"),
+        lambda: write_pivot_csv(result.violations, f"{base}/pivot_csv"),
+        lambda: write_stats(result.stats, f"{base}/stats"),
+        lambda: write_spc_csv(result, f"{base}/spc_csv"),
+    )

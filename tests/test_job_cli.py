@@ -1,7 +1,7 @@
 """The spark-submit job entry: full run → exit code + sinks + ledger,
 then a --resume run that skips PASSED partitions."""
 
-from jobs.validate import parse_args, run
+from jobs.validate import parse_args, report_verdicts, run
 from sgb_data_validator_spark.sources.generator import FixtureConfig, write_fixture_tables
 from sgb_data_validator_spark.sources.ledger import Ledger
 
@@ -90,6 +90,35 @@ def test_fill_rate_drift_flag_requires_baseline():
     assert args.fill_rate_drift and args.fill_rate_tol == 0.01
 
 
+CERT_COLUMNS = [
+    ("rule_id", "string"),
+    ("n_sample", "bigint"),
+    ("k_viol", "bigint"),
+    ("viol_rate", "double"),
+    ("upper_bound", "double"),
+    ("certified", "int"),
+]
+
+
+def test_report_verdicts_orders_like_spark_and_sets_exit_code(spark, capsys):
+    """One collect gives the console lines in Spark's ascending part
+    order (NULL first) and the exit code: 1 iff any partition FAILED."""
+    schema = "part string, error_count bigint, warning_count bigint, status string"
+    rows = [
+        ("2026-01-06", 2, 0, "FAILED"),
+        (None, 0, 1, "PASSED"),
+        ("2026-01-05", 0, 3, "PASSED"),
+    ]
+    verdicts = spark.createDataFrame(rows, schema)
+    assert report_verdicts(verdicts) == 1
+    assert capsys.readouterr().out.splitlines() == [
+        f"{r.part}\t{r.status}\terrors={r.error_count}\twarnings={r.warning_count}"
+        for r in verdicts.orderBy("part").collect()
+    ]
+    assert report_verdicts(verdicts.where("status = 'PASSED'")) == 0
+    assert report_verdicts(verdicts.limit(0)) == 0
+
+
 def test_certify_preflight_and_gate(spark, tmp_path):
     """--certify-bp writes a per-rule certificate; --certify-only gates
     with exit 3 on a dirty fixture under a tight SLO and exit 0 on a
@@ -113,6 +142,10 @@ def test_certify_preflight_and_gate(spark, tmp_path):
         "url_in_text.text", "tool.role_consistency",
     }
     assert all(r.upper_bound >= r.viol_rate for r in rows.values())
+    # the artifact keeps the certificate frame's columns and types, one
+    # row per rule in rule_id order
+    assert [(f.name, f.dataType.simpleString()) for f in cert.schema] == CERT_COLUMNS
+    assert [r.rule_id for r in cert.collect()] == sorted(rows)
     # certify-only must NOT have produced the full validation sinks
     import os
     assert not os.path.exists(f"{base}/cert_report/verdicts")
@@ -160,6 +193,11 @@ def test_certify_target_validates_only_suspect_partitions(spark, tmp_path):
     assert rc == 1  # suspect partitions carry real errors
 
     cert = spark.read.parquet(f"{base}/target_report/certificate_by_part")
+    assert [(f.name, f.dataType.simpleString()) for f in cert.schema] == [
+        ("part", "string"), *CERT_COLUMNS
+    ]
+    keys = [(r.part, r.rule_id) for r in cert.collect()]
+    assert keys == sorted(keys, key=lambda k: (str(k[0]), k[1]))
     by_part = {}
     for r in cert.collect():
         by_part.setdefault(str(r.part), []).append(r.certified)
